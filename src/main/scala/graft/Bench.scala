@@ -13,7 +13,9 @@ import org.apache.spark.sql.streaming.Trigger
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // default: this host's cores (a fixed count oversubscribes small boxes)
+    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -23,6 +25,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    System.err.println(s"[bench] cpus=$cpus")
 
     def force(name: String): Double = {
       val t0 = System.nanoTime()
@@ -124,7 +127,7 @@ object Bench {
     val unstableJson    = unstable.map("\"" + _ + "\"").mkString("[", ",", "]")
     val unstableCompact = unstable.take(8).map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","failed":$failed,"streaming_overhead":$streamOverheadSec%.3f,"unstable":$unstableJson,"streaming_net":$streamingNet,"queries":$qs,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","failed":$failed,"streaming_overhead":$streamOverheadSec%.3f,"unstable":$unstableJson,"streaming_net":$streamingNet,"queries":$qs,"sf":"$sfDir","cpus":$cpus}"""
     // The driver's stdout capture keeps only the LAST ~2000 chars of
     // stdout, and the full 319-query map is ~12 KB — r13/r14's BENCH
     // artifacts carried `parsed: null` because the capture window started

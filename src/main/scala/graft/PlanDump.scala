@@ -13,7 +13,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir, tag, names) = args.take(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // default: this host's cores (a fixed count oversubscribes small boxes)
+    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -23,6 +25,7 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    System.err.println(s"[plandump] cpus=$cpus")
     new java.io.File(outDir).mkdirs()
     names.split(',').foreach { name =>
       val df   = SparkEntry.queries(name)(spark, sfDir)

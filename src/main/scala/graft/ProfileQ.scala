@@ -17,7 +17,9 @@ object ProfileQ {
     val name  = args(0)
     val reps  = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // default: this host's cores (a fixed count oversubscribes small boxes)
+    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -27,6 +29,7 @@ object ProfileQ {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    System.err.println(s"[profileq] cpus=$cpus")
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
     val done = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Double)]

@@ -470,8 +470,10 @@ final class IceLiteScan(
     * filters prune nothing (conservative). */
   @volatile private var runtimeKept: Map[String, Set[String]] = Map.empty
 
+  // only columns the scan outputs: Spark resolves these against the
+  // scan's output, and a pruned-away partition column fails analysis
   override def filterAttributes(): Array[NamedReference] =
-    partCols.map(c => Expressions.column(c)).toArray
+    partCols.filter(required.fieldNames.contains).map(c => Expressions.column(c)).toArray
 
   override def filter(filters: Array[Filter]): Unit = {
     val kept = filters.flatMap {

@@ -643,8 +643,9 @@ final class IcebergMorScan(
   // timestamps → micros) to match the stored partition encodings.
   @volatile private var runtimeKept: Map[String, Set[String]] = Map.empty
 
+  // only columns the scan outputs (same rule as the IceLite scan)
   override def filterAttributes(): Array[NamedReference] =
-    partCols.map(c => Expressions.column(c))
+    partCols.filter(required.fieldNames.contains).map(c => Expressions.column(c))
 
   override def filter(filters: Array[Filter]): Unit = {
     def norm(c: String, v: Any): String = {

@@ -9,12 +9,14 @@ package graft
 object CcProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val cpus = Runtime.getRuntime.availableProcessors
     val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", 32)
+      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", false)
       .config("spark.sql.legacy.parquet.nanosAsLong", true)
       .getOrCreate()
+    System.err.println(s"[ccprobe] master=${spark.sparkContext.master}")
     val n = graft.ops.Dedup.ccLabels(spark, dir).count()
     println(s"CCPROBE dir=$dir labeled=$n rounds=${graft.ops.Dedup.lastCcRounds.get()}")
     spark.stop()

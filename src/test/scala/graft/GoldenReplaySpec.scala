@@ -169,19 +169,21 @@ class GoldenReplaySpec extends SparkSpec {
     assert(back.columns.length == 18)
   }
 
+  /** The golden export's shape, pinned in-repo (test resource
+    * `golden/sports_fans.schema`): (row count, column names and types). */
+  private lazy val sportsFansPin: (Long, Seq[(String, org.apache.spark.sql.types.DataType)]) = {
+    val src = scala.io.Source.fromResource("golden/sports_fans.schema")
+    val lines = try src.getLines().map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toList
+      finally src.close()
+    val Array("rows", n) = lines.head.split(' ')
+    (n.toLong, lines.tail.map { l =>
+      val Array(name, ddl) = l.split(' ')
+      name -> org.apache.spark.sql.types.DataType.fromDDL(ddl)
+    })
+  }
+
   test("sports_fans.parquet golden: our export's PHYSICAL schema matches the committed artifact") {
     import org.apache.spark.sql.types._
-    // read the reference's own committed export (read-only), not our
-    // replayed counts: 18 columns, int64 key, 7 strings, 10 booleans
-    val golden = spark.read.parquet("/root/reference/output/sports_fans.parquet")
-    assert(golden.count() == 8682L)
-    val (eng, t) = env
-    val out = scratch("golden_sports_schema")
-    eng.exportParquet(eng.table(t).filter(col("likesports")), out)
-    val ours = spark.read.parquet(out).schema
-    assert(ours.fieldNames.toSeq == golden.schema.fieldNames.toSeq,
-      s"column names/order diverge from the golden artifact: " +
-        s"${ours.fieldNames.mkString(",")} vs ${golden.schema.fieldNames.mkString(",")}")
     // types after §1.2 normalization, integer width folded: the reference
     // ingests CSV through pyarrow (ints default to int64) while Spark's
     // CSV inference picks the narrowest width — both land in the same
@@ -190,9 +192,30 @@ class GoldenReplaySpec extends SparkSpec {
       case IntegerType | LongType => LongType
       case other                  => graft.icelite.TypeNormalizer.normalizeType(other)
     }
-    ours.fields.zip(golden.schema.fields).foreach { case (a, b) =>
-      assert(norm(a.dataType) == norm(b.dataType),
-        s"${a.name}: ${a.dataType.simpleString} vs golden ${b.dataType.simpleString}")
+    def sameShape(a: StructType, b: Seq[(String, DataType)], what: String): Unit = {
+      assert(a.fieldNames.toSeq == b.map(_._1),
+        s"column names/order diverge from $what: " +
+          s"${a.fieldNames.mkString(",")} vs ${b.map(_._1).mkString(",")}")
+      a.fields.zip(b).foreach { case (f, (_, dt)) =>
+        assert(norm(f.dataType) == norm(dt),
+          s"${f.name}: ${f.dataType.simpleString} vs $what ${dt.simpleString}")
+      }
+    }
+    val (pinRows, pinCols) = sportsFansPin
+    assert(pinRows == 8682L && pinCols.length == 18)
+    val (eng, t) = env
+    val out = scratch("golden_sports_schema")
+    eng.exportParquet(eng.table(t).filter(col("likesports")), out)
+    val ours = spark.read.parquet(out)
+    assert(ours.count() == pinRows)
+    sameShape(ours.schema, pinCols, "the pinned golden")
+    // the reference's own committed export (read-only), when its checkout
+    // sits beside this repository: the pin must equal the artifact
+    val artifact = new java.io.File("../reference/output/sports_fans.parquet")
+    if (artifact.exists) {
+      val golden = spark.read.parquet(artifact.getPath)
+      assert(golden.count() == pinRows)
+      sameShape(golden.schema, pinCols, "the pinned golden (vs the artifact)")
     }
   }
 

@@ -35,11 +35,13 @@ object ServeProbe {
     val nSmall = args.headOption.map(_.toLong).getOrElse(500000L)
     val factor = args.lift(1).map(_.toLong).getOrElse(10L)
     val baseBuckets = args.lift(2).map(_.toLong).getOrElse(640L)
+    val cpus = Runtime.getRuntime.availableProcessors
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", 32)
+      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", false)
       .getOrCreate()
+    System.err.println(s"[serveprobe] master=${spark.sparkContext.master}")
     spark.sparkContext.setLogLevel("WARN")
 
     // fixed batch: 100 docs, half duplicating index groups (sig matches),
