@@ -93,9 +93,6 @@ object DeletionVectors {
     } finally in.close()
   }
 
-  private def normStr(s: String): String = s.replaceFirst("^[a-z][a-z0-9+.-]*:/+", "/")
-  private def normCol(c: Column): Column = regexp_replace(c, "^[a-z][a-z0-9+.-]*:/+", "/")
-
   /** Write one Puffin file holding a vector per (referenced data file,
     * serialized bitmap bytes) and return the manifest entries to commit:
     * content-1 delete entries whose `dvRef` carries (referenced file,
@@ -131,7 +128,7 @@ object DeletionVectors {
       spark: SparkSession, deletes: Seq[IcebergFormat.PlannedDelete],
       wanted: Set[String]): org.apache.spark.rdd.RDD[(String, Long)] = {
     val newest = deletes.filter(d => d.content == 1 && d.dvRef.isDefined)
-      .groupBy(d => normStr(d.dvRef.get)).map { case (f, ds) => f -> ds.maxBy(_.seq) }
+      .groupBy(d => IcebergFormat.normPath(d.dvRef.get)).map { case (f, ds) => f -> ds.maxBy(_.seq) }
       .filter { case (f, _) => wanted.contains(f) }
     if (newest.isEmpty) return spark.sparkContext.emptyRDD
     val metas = newest.toSeq.map { case (f, d) => (f, d.path.toString, d.dvOffset, d.dvSize) }
@@ -169,7 +166,7 @@ object DeletionVectors {
     require(p.files.nonEmpty, "nothing to delete from")
     // matched rows with provenance; parquet pushdown prunes the scan
     val raw = spark.read.schema(p.schema).parquet(p.files.map(_.path.toString): _*)
-      .withColumn("__path", normCol(col("_metadata.file_path")))
+      .withColumn("__path", IcebergFormat.normPathCol(col("_metadata.file_path")))
       .withColumn("__pos", col("_metadata.row_index"))
     val matched = raw.filter(condition).select(col("__path"), col("__pos"))
     val newPairs = matched.rdd.map(r => (r.getString(0), r.getLong(1)))
@@ -183,7 +180,7 @@ object DeletionVectors {
     val parquetPairs =
       if (parquetDeletes.isEmpty) spark.sparkContext.emptyRDD[(String, Long)]
       else IcebergFormat.positionDeletesFrame(spark, parquetDeletes)
-        .select(normCol(col("file_path")).as("f"), col("pos"))
+        .select(IcebergFormat.normPathCol(col("file_path")).as("f"), col("pos"))
         .rdd.map(r => (r.getString(0), r.getLong(1)))
         .filter { case (f, _) => affected.contains(f) }
     val vectors = buildBitmaps(newPairs.union(prior).union(parquetPairs))
@@ -206,7 +203,7 @@ object DeletionVectors {
       .filter(d => d.content == 1 && d.dvRef.isEmpty).map(_.path.toString)
     if (parquetDeletes.isEmpty) return 0
     val parquetPairs = IcebergFormat.positionDeletesFrame(spark, parquetDeletes)
-      .select(normCol(col("file_path")).as("f"), col("pos"))
+      .select(IcebergFormat.normPathCol(col("file_path")).as("f"), col("pos"))
       .rdd.map(r => (r.getString(0), r.getLong(1)))
     val affected = parquetPairs.keys.distinct().collect().toSet
     val prior    = dvPairs(spark, p.deletes, affected)

@@ -1169,7 +1169,7 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
       case org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType |
           org.apache.spark.sql.types.DoubleType | org.apache.spark.sql.types.FloatType =>
         (a, b) => BigDecimal(a).compare(BigDecimal(b))
-      case _ => (a, b) => a.compareTo(b)
+      case _ => StringOrder.compare
     }
 
   /** Fold a manifest's per-file stats into one per-column range — the
@@ -2290,7 +2290,8 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
         else {
           val ranges = newDelEntries.map(_.stats.flatMap(_.get("file_path")))
           def covered(f: String): Boolean = ranges.exists {
-            case Some(r) => r.min.forall(_.compareTo(f) <= 0) && r.max.forall(f.compareTo(_) <= 0)
+            case Some(r) =>
+              r.min.forall(StringOrder.compare(_, f) <= 0) && r.max.forall(StringOrder.compare(f, _) <= 0)
             case None    => true // statless delete file: conservative keep
           }
           val cands    = parent.toSeq.flatMap(filesOf).filter(covered)

@@ -1289,22 +1289,15 @@ object IcebergFormat {
     if (p.deletes.isEmpty && overlayIds.isEmpty && p.fieldDefaults.isEmpty && !lineage)
       return base
 
-    // URI-scheme normalization so manifest paths (`file:/x`, `/x`) and
-    // Spark's `_metadata.file_path` (`file:///x`) compare equal. Local and
-    // bucket-style paths only — an authority component would need the
-    // full-URI form on both sides.
-    def normStr(s: String): String  = s.replaceFirst("^[a-z][a-z0-9+.-]*:/+", "/")
-    def normCol(c: Column): Column = regexp_replace(c, "^[a-z][a-z0-9+.-]*:/+", "/")
-
     var data = base
-      .withColumn("__path", normCol(col("_metadata.file_path")))
+      .withColumn("__path", normPathCol(col("_metadata.file_path")))
       .withColumn("__pos", col("_metadata.row_index"))
 
     if (overlayIds.nonEmpty) {
       val pSchema = StructType(StructField("__path", StringType) +:
         overlayIds.map(id => StructField(s"__pv_$id", StringType)))
       val pRows = files.map(f => org.apache.spark.sql.Row.fromSeq(
-        normStr(f.path.toString) +: overlayIds.map(id => f.partition.get(id).map(_.toString).orNull)))
+        normPath(f.path.toString) +: overlayIds.map(id => f.partition.get(id).map(_.toString).orNull)))
       val pdf = spark.createDataFrame(
         spark.sparkContext.parallelize(pRows, 1), pSchema)
       data = data.join(broadcast(pdf), Seq("__path"), "left")
@@ -1322,13 +1315,13 @@ object IcebergFormat {
     // partition reconstruction above.
     val defNeeds: Seq[(Int, Set[String])] = p.fieldDefaults.keys.toSeq.sorted.map { id =>
       id -> files.filter(f => p.absentBySeq.getOrElse(f.seq, Set.empty[Int]).contains(id))
-        .map(f => normStr(f.path.toString)).toSet
+        .map(f => normPath(f.path.toString)).toSet
     }.filter(_._2.nonEmpty)
     if (defNeeds.nonEmpty) {
       val dSchema = StructType(StructField("__path", StringType) +:
         defNeeds.map { case (id, _) => StructField(s"__df_$id", BooleanType) })
       val dRows = files.map { f =>
-        val n = normStr(f.path.toString)
+        val n = normPath(f.path.toString)
         org.apache.spark.sql.Row.fromSeq(
           n +: defNeeds.map { case (_, set) => Boolean.box(set(n)) })
       }
@@ -1347,7 +1340,7 @@ object IcebergFormat {
     // rewrite materialized them physically — physical wins via coalesce
     if (lineage) {
       val ldf = spark.createDataFrame(files.map(f =>
-        (normStr(f.path.toString), f.firstRowId.getOrElse(-1L),
+        (normPath(f.path.toString), f.firstRowId.getOrElse(-1L),
           f.firstRowId.isDefined, f.seq)))
         .toDF("__path", "__frbase", "__frset", "__fseq")
       data = data.join(broadcast(ldf), Seq("__path"), "left")
@@ -1360,7 +1353,7 @@ object IcebergFormat {
     if (p.deletes.isEmpty)
       return data.select(outNames.map(col).toIndexedSeq: _*)
 
-    val seqRows = files.map(f => (normStr(f.path.toString), f.seq))
+    val seqRows = files.map(f => (normPath(f.path.toString), f.seq))
     val seqDf   = spark.createDataFrame(seqRows).toDF("__path", "__dataseq")
     data = data.join(broadcast(seqDf), "__path")
 
@@ -1373,7 +1366,7 @@ object IcebergFormat {
     // anti-join is idempotent, so that costs IO, never correctness.
     val dvDeletes = p.deletes.filter(d => d.content == 1 && d.dvRef.isDefined)
     if (dvDeletes.nonEmpty) {
-      val dvByFile = dvDeletes.groupBy(d => normStr(d.dvRef.get))
+      val dvByFile = dvDeletes.groupBy(d => normPath(d.dvRef.get))
         .map { case (f, ds) => f -> ds.maxBy(_.seq) }
       val metas = dvByFile.toSeq.map { case (f, d) =>
         (f, d.seq, d.path.toString, d.dvOffset, d.dvSize)
@@ -1405,7 +1398,7 @@ object IcebergFormat {
         // delete group (round 18 — metadata-only, the rows still stream)
         spark.read.schema(positionDeletesSchema)
           .parquet(group.map(_.path.toString): _*)
-          .select(normCol(col("file_path")).as("__dp"), col("pos").as("__dpos"),
+          .select(normPathCol(col("file_path")).as("__dp"), col("pos").as("__dpos"),
             lit(seq).as("__delseq"))
       }.reduce(_ unionAll _)
       data = data.join(broadcast(dels),
@@ -1494,7 +1487,7 @@ object IcebergFormat {
           case (Some(x), Some(y)) => java.lang.Long.compare(x, y)
           case _                  => 0
         }
-      case _                      => a.compareTo(b)
+      case _                      => StringOrder.compare(a, b)
     }
     // identity partition value first: for a partitioned table it prunes
     // exactly (the file holds ONLY rows with that value), even when the
@@ -1520,7 +1513,7 @@ object IcebergFormat {
                 case None => true
                 case Some(t) =>
                   val c = (pval, t) match {
-                    case (p: String, tt: String) => p.compareTo(tt)
+                    case (p: String, tt: String) => StringOrder.compare(p, tt)
                     case (p, tt)                 => java.lang.Long.compare(num(p), num(tt))
                   }
                   if (isLower) c >= 0 else c <= 0
@@ -1546,6 +1539,19 @@ object IcebergFormat {
       }
     }
   }
+
+  private[graft] val SchemePrefix = "^[a-z][a-z0-9+.-]*:/+".r
+
+  /** A path with its URI scheme folded away (`file:/x`, `file:///x` and
+    * `/x` all become `/x`), the form position deletes and data files are
+    * matched in. Local and bucket-style paths only — an authority
+    * component would need the full-URI form on both sides. */
+  private[graft] def normPath(s: String): String = SchemePrefix.replaceFirstIn(s, "/")
+
+  /** [[normPath]] over a column: manifest paths and Spark's
+    * `_metadata.file_path` (`file:///x`) compare in this form. */
+  private[graft] def normPathCol(c: Column): Column =
+    org.apache.spark.sql.functions.regexp_replace(c, SchemePrefix.regex, "/")
 
   /** Range-pruned scan over a standard Iceberg table: reads only files
     * whose bounds can contain `colName` in [lower, upper]; the caller
@@ -1634,12 +1640,12 @@ object IcebergFormat {
     * defeats manifest pruning at exactly the scale it targets. Lower bound
     * = 16-code-point prefix (a prefix is ≤ the value in any consistent
     * order). Upper bound = the prefix with its last incrementable code
-    * point bumped — strictly greater than the value. Only code points
-    * below the surrogate block (U+D7FF) are bumped, so the result compares
-    * identically in UTF-16 (the pruner's String.compareTo) and code-point
-    * (the spec's UTF-8 byte) order; when no position can bump (wildly
-    * unlikely outside adversarial input) the upper bound is dropped
-    * entirely, which every pruner treats as unbounded — conservative. */
+    * point bumped — strictly greater than the value in [[StringOrder]]
+    * (the spec's UTF-8 byte order). Only code points below the surrogate
+    * block (U+D7FF) are bumped, so the bump stays one UTF-16 char; when no
+    * position can bump (wildly unlikely outside adversarial input) the
+    * upper bound is dropped entirely, which every pruner treats as
+    * unbounded — conservative. */
   private[graft] val boundTruncWidth = 16
 
   private[graft] def truncateLowerBound(s: String, w: Int = boundTruncWidth): String =
@@ -2417,7 +2423,7 @@ object IcebergFormat {
         java.lang.Double.compare(a.asInstanceOf[Number].doubleValue, b.asInstanceOf[Number].doubleValue)
       case "boolean" =>
         java.lang.Boolean.compare(a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
-      case _ => a.toString.compareTo(b.toString)
+      case _ => StringOrder.compare(a.toString, b.toString)
     }
 
     /** Single-value serialization of a partition value (spec Appendix D —

@@ -32,6 +32,30 @@ final case class RefInfo(snapshot_id: Long, ref_type: String) // "branch" | "tag
   * The planner skips files whose range can't satisfy a predicate. */
 final case class ColRange(min: Option[String], max: Option[String])
 
+/** The one order string bounds are recorded and compared in: Unicode code
+  * point order, which is UTF-8 byte order — what parquet footers, Spark's
+  * own min/max and Iceberg's bound serialization use. `String.compareTo`
+  * (UTF-16 order) disagrees once a supplementary character meets one in
+  * U+E000..U+FFFF, and a pruner comparing in it drops live files. */
+object StringOrder {
+  def compare(a: String, b: String): Int = {
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n) {
+      val x = a.charAt(i)
+      val y = b.charAt(i)
+      if (x != y) return fix(x) - fix(y)
+      i += 1
+    }
+    a.length - b.length
+  }
+
+  // UTF-16 order equals code point order except that surrogates (the
+  // supplementary planes) must sort above U+E000..U+FFFF
+  private def fix(c: Char): Int =
+    if (c < '\uD800') c else if (c >= '\uE000') c - 0x800 else c + 0x2000
+}
+
 /** One field of a sort order (Iceberg spec §Sort Orders): the source
   * column's field id, a transform (`identity` for plain lexicographic
   * clustering; `zorder[bits]` for the engine's Morton-curve layout, which

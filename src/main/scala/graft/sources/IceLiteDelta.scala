@@ -1,10 +1,9 @@
 package graft.sources
 
-import graft.icelite.{IceTable, ManifestEntry, Snapshot}
+import graft.icelite.{IceTable, Snapshot}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
@@ -140,16 +139,13 @@ final class IceLiteDeltaWrite(
     private val dataRel   = s"data/snap-d-$tag"
 
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
-      new IceLiteDeltaWriterFactory(conf, location, deleteRel, dataRel, schema, partCols)
+      FileDeltaWriterFactory(FileWriteSpec(conf, location, dataRel, schema,
+        partCols = partCols, hive = true), deleteRel)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val msgs = messages.toSeq.map(_.asInstanceOf[IceLiteDeltaMessage])
-      def entries(ws: Seq[IceLiteWriteMessage]): Seq[ManifestEntry] =
-        ws.map(w => ManifestEntry(w.relPath, Some(w.stats), Some(w.rows),
-        Some(w.sizeBytes).filter(_ > 0), Some(w.splitOffsets.toList).filter(_.nonEmpty)))
-          .filter(_.rows.exists(_ > 0L)) // empty task outputs add no files
-      val dels = entries(msgs.flatMap(_.deleteFile))
-      val ins  = entries(msgs.flatMap(_.dataFiles))
+      val (data, deletes) = WrittenFiles.of(messages)
+      val ins  = IceLiteWrite.entries(data, schema)
+      val dels = IceLiteWrite.entries(deletes, IceTable.PositionDeleteSchema)
       if (dels.isEmpty && ins.isEmpty) return // nothing matched: no snapshot
       val t = IceTable.load(SparkSession.active, location)
       t.commitRowDeltas(dels, ins, operation)
@@ -162,96 +158,4 @@ final class IceLiteDeltaWrite(
       fs.delete(new Path(location, dataRel), true)
     }
   }
-}
-
-final case class IceLiteDeltaMessage(
-    deleteFile: Option[IceLiteWriteMessage],
-    dataFiles: Seq[IceLiteWriteMessage])
-    extends WriterCommitMessage
-
-final class IceLiteDeltaWriterFactory(
-    conf: SerializableHadoopConf,
-    location: String,
-    deleteRel: String,
-    dataRel: String,
-    schema: StructType,
-    partCols: Seq[String])
-    extends DeltaWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new IceLiteDeltaWriter(conf, location, deleteRel, dataRel, schema, partCols,
-      partitionId, taskId)
-}
-
-/** Executor-side delta writer. `delete` receives the projected row ID
-  * `(_file, _pos)` and STREAMS it into a position-delete parquet via the
-  * same stats-collecting [[IceLiteDataWriter]] data files use — the
-  * `file_path` min/max it records per delete file is what lets readers
-  * range-prune which delete files to open. No buffering: the delta plan is
-  * a narrow filter+project over the scan (rows arrive file-clustered,
-  * positions ascending), and even if a future plan shuffles them the
-  * output stays correct — readers apply deletes as a set. Inserts stage
-  * ordinary data files. */
-final class IceLiteDeltaWriter(
-    conf: SerializableHadoopConf,
-    location: String,
-    deleteRel: String,
-    dataRel: String,
-    schema: StructType,
-    partCols: Seq[String],
-    partitionId: Int,
-    taskId: Long)
-    extends DeltaWriter[InternalRow] {
-
-  private var delWriter: IceLiteDataWriter = _
-  // inserts on a hive layout stage through the SAME rolling partitioned
-  // writer SQL INSERT uses (one `pc=v/` file per value per task, min=max
-  // partition stats); flat tables keep the single-file writer
-  private var insWriter: DataWriter[InternalRow] = _
-  private val delRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
-
-  override def delete(metadata: InternalRow, id: InternalRow): Unit = {
-    if (delWriter == null)
-      delWriter = new IceLiteDataWriter(conf, location, deleteRel,
-        IceTable.PositionDeleteSchema, partitionId, taskId)
-    val pos = id.getLong(1)
-    require(pos >= 0 && pos <= Int.MaxValue.toLong,
-      s"row position $pos outside the position-delete range")
-    // copy the UTF8String: the projected row is a view over the input row
-    delRow.update(0, id.getUTF8String(0).clone())
-    delRow.update(1, pos)
-    delWriter.write(delRow)
-  }
-
-  override def insert(row: InternalRow): Unit = {
-    if (insWriter == null)
-      insWriter =
-        if (partCols.isEmpty)
-          new IceLiteDataWriter(conf, location, dataRel, schema, partitionId, taskId)
-        else
-          new IceLitePartitionedDataWriter(conf, location, dataRel, schema, partCols,
-            partitionId, taskId)
-    insWriter.write(row)
-  }
-
-  /** Never called: representUpdateAsDeleteAndInsert splits updates. */
-  override def update(metadata: InternalRow, id: InternalRow, row: InternalRow): Unit =
-    throw new UnsupportedOperationException(
-      "icelite delta updates are represented as delete+insert")
-
-  override def reinsert(metadata: InternalRow, row: InternalRow): Unit = insert(row)
-
-  override def commit(): WriterCommitMessage = IceLiteDeltaMessage(
-    Option(delWriter).map(_.commit().asInstanceOf[IceLiteWriteMessage]),
-    Option(insWriter).map(_.commit()).toSeq.flatMap {
-      case p: IceLitePartitionedWriteMessage => p.entries
-      case m: IceLiteWriteMessage            => Seq(m)
-    })
-
-  override def abort(): Unit = {
-    if (delWriter != null) delWriter.abort()
-    if (insWriter != null) insWriter.abort()
-  }
-
-  override def close(): Unit = ()
 }

@@ -1,11 +1,9 @@
 package graft.sources
 
-import graft.icelite.{IceTable, ManifestEntry, Snapshot}
+import graft.icelite.{IceTable, Snapshot}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.RowDeltaUtils
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -108,15 +106,12 @@ final class IceLiteReplaceDataWrite(
       new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration)
     private val dataRel = s"data/snap-rl-${java.util.UUID.randomUUID().toString.take(8)}"
 
+    // rows may carry Spark's leading operation column (RollingWriter strips it)
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-      new IceLiteRowLevelWriterFactory(conf, location, dataRel, schema)
+      FileWriterFactory(FileWriteSpec(conf, location, dataRel, schema))
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val entries = messages.toSeq.map { m =>
-        val w = m.asInstanceOf[IceLiteWriteMessage]
-        ManifestEntry(w.relPath, Some(w.stats), Some(w.rows),
-        Some(w.sizeBytes).filter(_ > 0), Some(w.splitOffsets.toList).filter(_.nonEmpty))
-      }.filter(_.rows.exists(_ > 0L)) // empty task outputs add no files
+      val entries = IceLiteWrite.entries(WrittenFiles.of(messages)._1, schema)
       val t = IceTable.load(SparkSession.active, location)
       t.commitReplaceScanned(scannedFiles(), entries, operation)
       onCommit.foreach(_(t))
@@ -127,42 +122,4 @@ final class IceLiteReplaceDataWrite(
       fs.delete(new org.apache.hadoop.fs.Path(location, dataRel), true)
     }
   }
-}
-
-/** Executor-side writer for ReplaceData rows. Spark's group-based
-  * UPDATE/MERGE rewrites prepend a `__row_operation` int column
-  * (RowDeltaUtils.WRITE_WITH_METADATA_OPERATION) to the query output and
-  * — when the operation exposes no metadata attributes — hand the rows to
-  * the writer UNPROJECTED (ReplaceDataExec.writingTask falls back to the
-  * plain DataWritingSparkTask). Detect that shape by arity: an
-  * (arity+1)-field row is (op, data...) — strip the op via a reusable
-  * ProjectingInternalRow and drop rows marked DELETE; an arity-field row
-  * (the DELETE rewrite's remaining-rows plan) passes straight through. */
-final class IceLiteRowLevelWriterFactory(
-    conf: SerializableHadoopConf,
-    location: String,
-    dataRel: String,
-    schema: StructType)
-    extends DataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private val inner =
-        new IceLiteDataWriter(conf, location, dataRel, schema, partitionId, taskId)
-      private val arity = schema.fields.length
-      private val proj = new org.apache.spark.sql.catalyst.ProjectingInternalRow(
-        schema, (1 to arity).toIndexedSeq)
-
-      override def write(row: InternalRow): Unit =
-        if (row.numFields == arity + 1) {
-          if (row.getInt(0) != RowDeltaUtils.DELETE_OPERATION) {
-            proj.project(row)
-            inner.write(proj)
-          }
-        } else inner.write(row)
-
-      override def commit(): WriterCommitMessage = inner.commit()
-      override def abort(): Unit = inner.abort()
-      override def close(): Unit = inner.close()
-    }
 }

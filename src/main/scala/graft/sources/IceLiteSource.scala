@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.icelite.{FsCatalog, IceTable, Snapshot}
+import graft.icelite.{FsCatalog, IceTable, IcebergFormat, Snapshot, StringOrder}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -432,7 +432,7 @@ final class IceLiteScan(
         else {
           val cmp: (String, String) => Int =
             if (numericPart(dt)) (a, b) => BigDecimal(a).compare(BigDecimal(b))
-            else (a, b) => a.compareTo(b)
+            else StringOrder.compare
           lo.forall(l => cmp(v, l) >= 0) && hi.forall(h => cmp(v, h) <= 0)
         }
     }
@@ -844,14 +844,15 @@ final class IceLiteReaderFactory(
     tableSchema: StructType,
     limit: Option[Int] = None,
     deletes: Seq[PositionDeleteFile] = Nil,
-    eqDeletes: Seq[EqualityDeleteFile] = Nil)
+    eqDeletes: Seq[EqualityDeleteFile] = Nil,
+    absolutePaths: Boolean = false)
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[IceLitePartition]
     new IceLitePartitionReader(conf.value, p, required, partCols, tableSchema, limit,
       deletes ++ p.deletes, // set-union semantics: factory-wide + partition-scoped
-      eqDeletes)
+      eqDeletes, absolutePaths)
   }
 }
 
@@ -887,7 +888,8 @@ final class IceLitePartitionReader(
     tableSchema: StructType,
     limit: Option[Int] = None,
     deletes: Seq[PositionDeleteFile] = Nil,
-    eqDeletes: Seq[EqualityDeleteFile] = Nil)
+    eqDeletes: Seq[EqualityDeleteFile] = Nil,
+    absolutePaths: Boolean = false)
     extends PartitionReader[InternalRow] {
 
   private val partIdx: Map[String, Int] = partCols.zipWithIndex.toMap
@@ -962,7 +964,7 @@ final class IceLitePartitionReader(
   private var synthBase: Array[Any] = _
   private var curPos: Long = 0L
   private var curRange: IceLiteFileRange = _ // active byte-range split, or null
-  private var curRelUtf8: UTF8String = _
+  private var curFileUtf8: UTF8String = _
   private var curFirstRowId: java.lang.Long = _ // null = lineage unassigned for this file
   private var curFileSeqBox: java.lang.Long = _ // null = no sequence known (non-MoR path)
   private var rowIdFill: Array[Int] = Array.empty   // rowIdOrds unless physically present
@@ -1043,22 +1045,28 @@ final class IceLitePartitionReader(
     if (p != null) p else initDefaults.getOrElse(name, null)
   }
 
-  /** Manifest-relative path of an absolute data-file path (anchored at the
-    * `data/snap-` segment every committed file lives under) — the `_file`
-    * value, and the key position-delete files match on. */
-  private def relOf(full: String): String = {
-    val i = full.indexOf("/data/snap-")
-    if (i >= 0) full.substring(i + 1) else full
-  }
+  /** The `_file` value of a data file, and the key position-delete files
+    * record for it: manifest-relative (anchored at the `data/snap-`
+    * segment every committed IceLite file lives under) on an IceLite
+    * table; the scheme-normalized full path on a standard v2 table, whose
+    * manifests list full paths — the key `IcebergFormat.scan` and every
+    * other v2 reader match deletes on, including for files under
+    * `data/snap-` (V2-written or adopted by a zero-copy export). */
+  private def fileKey(full: String): String =
+    if (absolutePaths) IcebergFormat.normPath(full)
+    else {
+      val i = full.indexOf("/data/snap-")
+      if (i >= 0) full.substring(i + 1) else full
+    }
 
-  /** Deleted positions of data file `rel` as a bitmap, or null when no
-    * delete file's path range covers it. Bounded work: only covering
-    * delete files are opened (range-pruned), and the bitmap holds only
-    * this file's deleted positions — the per-task "delete index" shape
-    * Iceberg MoR readers use. */
-  private def loadDeletes(rel: String): java.util.BitSet = {
-    def strip(s: String) = s.replaceFirst("^[a-z][a-z0-9+.-]*:/+", "/")
-    val relN = strip(rel)
+  /** Deleted positions of the data file keyed `key` as a bitmap, or null
+    * when no delete file's path range covers it. Bounded work: only
+    * covering delete files are opened (range-pruned), and the bitmap holds
+    * only this file's deleted positions — the per-task "delete index"
+    * shape Iceberg MoR readers use. Paths compare scheme-normalized, so a
+    * delete recording `file:/x` applies to the data file `/x`. */
+  private def loadDeletes(key: String): java.util.BitSet = {
+    val keyN = IcebergFormat.normPath(key)
     // v3 deletion vectors match their referenced file EXACTLY (fields
     // 143-145); parquet delete files match by their recorded path range.
     // When multiple vectors name the file, older ones are subsets of the
@@ -1066,9 +1074,10 @@ final class IceLitePartitionReader(
     // applying the newest.
     val covering = deletes.filter { d =>
       d.dv match {
-        case Some((_, _, ref)) => strip(ref) == relN
+        case Some((_, _, ref)) => IcebergFormat.normPath(ref) == keyN
         case None =>
-          d.minFp.forall(_.compareTo(rel) <= 0) && d.maxFp.forall(rel.compareTo(_) <= 0)
+          d.minFp.forall(lo => StringOrder.compare(IcebergFormat.normPath(lo), keyN) <= 0) &&
+            d.maxFp.forall(hi => StringOrder.compare(keyN, IcebergFormat.normPath(hi)) <= 0)
       }
     }
     if (covering.isEmpty) return null
@@ -1091,7 +1100,8 @@ final class IceLitePartitionReader(
           try {
             var g = rdr.read()
             while (g != null) {
-              if (g.getString("file_path", 0) == rel) {
+              val fp = g.getString("file_path", 0)
+              if (fp == key || IcebergFormat.normPath(fp) == keyN) {
                 val p = g.getLong("pos", 0)
                 require(p >= 0 && p <= Int.MaxValue.toLong, s"delete position $p out of bitmap range")
                 bs.set(p.toInt)
@@ -1130,9 +1140,9 @@ final class IceLitePartitionReader(
     fileIdx += 1
     IceLiteSource.filesOpened.increment()
 
-    val rel = relOf(full)
-    curRelUtf8 = UTF8String.fromString(rel)
-    delSet = loadDeletes(rel)
+    val key = fileKey(full)
+    curFileUtf8 = UTF8String.fromString(key)
+    delSet = loadDeletes(key)
 
     val inFile  = HadoopInputFile.fromPath(path, conf)
     val fr      = ParquetFileReader.open(inFile)
@@ -1240,7 +1250,7 @@ final class IceLitePartitionReader(
           (g: Group) => keys.contains(fns.map(_(g)).toList)
         }.toArray
       }
-      val relU  = curRelUtf8
+      val relU  = curFileUtf8
       rowFns = required.fields.map { f =>
         posOf.get(f.name) match {
           case Some(i) =>
@@ -1280,7 +1290,7 @@ final class IceLitePartitionReader(
           val p = curPos; curPos += 1
           if (delSet == null || p > Int.MaxValue.toLong || !delSet.get(p.toInt)) {
             val vals = synthBase.clone()
-            fileOrds.foreach(i => vals(i) = curRelUtf8)
+            fileOrds.foreach(i => vals(i) = curFileUtf8)
             posOrds.foreach(i => vals(i) = p)
             rowIdFill.foreach(i => vals(i) =
               if (curFirstRowId == null) null else curFirstRowId.longValue() + p)

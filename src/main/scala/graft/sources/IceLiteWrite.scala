@@ -3,14 +3,7 @@ package graft.sources
 import graft.icelite.{ColRange, IceTable, ManifestEntry}
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
@@ -140,16 +133,10 @@ final class IceLiteStreamingWrite(
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): streaming.StreamingDataWriterFactory =
-    IceLiteStreamingWriterFactory(conf, location, schema)
+    FileWriterFactory(FileWriteSpec(conf, location, "data/snap", schema))
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    // zero-row task outputs add no files: a stats-less empty file would be
-    // unprunable forever (no recorded range = conservative keep)
-    val entries = messages.toSeq.map { m =>
-      val w = m.asInstanceOf[IceLiteWriteMessage]
-      ManifestEntry(w.relPath, Some(w.stats), Some(w.rows),
-        Some(w.sizeBytes).filter(_ > 0), Some(w.splitOffsets.toList).filter(_.nonEmpty))
-    }.filter(_.rows.exists(_ > 0L))
+    val entries = IceLiteWrite.entries(WrittenFiles.of(messages)._1, schema)
     val t = IceTable.load(SparkSession.active, location)
     t.commitStagedEntries(entries, replace = false, token = Some(s"v2-$queryId-epoch-$epochId"))
     onCommit.foreach(_(t))
@@ -157,10 +144,7 @@ final class IceLiteStreamingWrite(
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val fs = new Path(location).getFileSystem(conf.value)
-    messages.foreach {
-      case m: IceLiteWriteMessage => fs.delete(new Path(location, m.relPath), false)
-      case _                      =>
-    }
+    WrittenFiles.of(messages)._1.foreach(f => fs.delete(new Path(location, f.path), false))
   }
 }
 
@@ -179,8 +163,8 @@ final class IceLiteBatchWrite(
   private val dataRel = s"data/snap-w-${java.util.UUID.randomUUID().toString.take(8)}"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    if (partCols.isEmpty) new IceLiteWriterFactory(conf, location, dataRel, schema)
-    else new IceLitePartitionedWriterFactory(conf, location, dataRel, schema, partCols)
+    FileWriterFactory(FileWriteSpec(conf, location, dataRel, schema,
+      partCols = partCols, hive = true))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     // write-audit-publish (Iceberg's `spark.wap.branch` idiom): with
@@ -192,13 +176,7 @@ final class IceLiteBatchWrite(
       .filter(_.nonEmpty)
     require(wap.isEmpty || (byFilter.isEmpty && !dynamic && !replace),
       "graft.wap.branch supports plain INSERT INTO appends only")
-    // zero-row task outputs add no files (see streaming commit note)
-    val entries = messages.toSeq.flatMap {
-      case p: IceLitePartitionedWriteMessage => p.entries
-      case m: IceLiteWriteMessage            => Seq(m)
-    }.map(w => ManifestEntry(w.relPath, Some(w.stats), Some(w.rows),
-        Some(w.sizeBytes).filter(_ > 0), Some(w.splitOffsets.toList).filter(_.nonEmpty)))
-      .filter(_.rows.exists(_ > 0L))
+    val entries = IceLiteWrite.entries(WrittenFiles.of(messages)._1, schema)
     val t = IceTable.load(SparkSession.active, location)
     if (byFilter.isDefined) {
       // filter-based overwrite: atomically swap the provably-matching
@@ -227,334 +205,21 @@ final class IceLiteBatchWrite(
   }
 }
 
-final case class IceLiteWriteMessage(
-    relPath: String,
-    rows: Long,
-    stats: Map[String, ColRange],
-    sizeBytes: Long = 0L, // file length, read executor-side at close
-    splitOffsets: Seq[Long] = Nil) // row-group starts (zero-IO ranged splits)
-    extends WriterCommitMessage
-
-/** One partitioned task's output: one file entry per partition value the
-  * task held (clustering makes that set disjoint across tasks). */
-final case class IceLitePartitionedWriteMessage(entries: Seq[IceLiteWriteMessage])
-    extends WriterCommitMessage
-
-final case class IceLitePartitionedWriterFactory(
-    conf: SerializableHadoopConf,
-    location: String,
-    dataRel: String,
-    schema: StructType,
-    partCols: Seq[String])
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new IceLitePartitionedDataWriter(conf, location, dataRel, schema, partCols,
-      partitionId, taskId)
-}
-
-/** Hive-layout V2 writer: rows arrive clustered+sorted on the partition
-  * columns (requested via RequiresDistributionAndOrdering), so this
-  * writer keeps exactly ONE parquet file open, rolling to a new
-  * `pc=v/...` file when the partition key changes. Each rolled file's
-  * entry carries (a) the data-column min/max collected inline by the
-  * wrapped [[IceLiteDataWriter]] and (b) min=max=value ranges for the
-  * partition columns — the same per-file stats the library's hive-layout
-  * manifest pass records, so partition-predicate file pruning, DPP,
-  * storage-partitioned joins and metadata COUNT(*) behave identically
-  * for SQL-INSERTed data. Partition values ride the PATH (Spark's
-  * escaping; data files do not repeat the columns — the read path
-  * restores them, DataSourceV2Spec's round-trip contract). */
-final class IceLitePartitionedDataWriter(
-    conf: SerializableHadoopConf,
-    location: String,
-    dataRel: String,
-    schema: StructType,
-    partCols: Seq[String],
-    partitionId: Int,
-    taskId: Long)
-    extends DataWriter[InternalRow] {
-
-  private val partIdx: IndexedSeq[Int] = partCols.map(schema.fieldIndex).toIndexedSeq
-  private val dataIdx: IndexedSeq[Int] =
-    schema.fields.indices.filterNot(partIdx.contains).toIndexedSeq
-  private val dataSchema = StructType(dataIdx.map(schema.fields))
-  private val proj = new org.apache.spark.sql.catalyst.ProjectingInternalRow(dataSchema, dataIdx)
-
-  private var curKey: Seq[String] = null // cast-to-string partition values (null = SQL NULL)
-  private var cur: IceLiteDataWriter = _
-  private val done = scala.collection.mutable.ListBuffer.empty[IceLiteWriteMessage]
-
-  /** Partition value -> its `CAST(v AS STRING)` form (what the library's
-    * stats pass records and the path carries pre-escaping). */
-  private def valueStr(i: Int, row: InternalRow): String = {
-    val idx = partIdx(i)
-    if (row.isNullAt(idx)) null
-    else schema.fields(idx).dataType match {
-      case StringType  => row.getUTF8String(idx).toString
-      case IntegerType => row.getInt(idx).toString
-      case LongType    => row.getLong(idx).toString
-      case BooleanType => row.getBoolean(idx).toString
-      case DateType    => java.time.LocalDate.ofEpochDay(row.getInt(idx).toLong).toString
-      case other => throw new UnsupportedOperationException(
-        s"icelite V2 partitioned write: unsupported partition type $other " +
-          s"for column ${schema.fields(idx).name}")
-    }
-  }
-
-  private def roll(): Unit = if (cur != null) {
-    val m = cur.commit().asInstanceOf[IceLiteWriteMessage]
-    // min=max=value partition-column ranges (null value -> omitted:
-    // conservative keep, matching the library's null-group stats)
-    val partStats = partCols.indices.flatMap { i =>
-      Option(curKey(i)).map(v => partCols(i) -> ColRange(Some(v), Some(v)))
-    }.toMap
-    done += m.copy(stats = m.stats ++ partStats)
-    cur = null
-  }
-
-  override def write(row: InternalRow): Unit = {
-    val key = partCols.indices.map(i => valueStr(i, row))
-    if (key != curKey) {
-      roll()
-      curKey = key
-      val segs = partCols.indices.map { i =>
-        val seg = Option(key(i))
-          .map(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName)
-          .getOrElse(IceLiteScan.HiveNullPart)
-        s"${partCols(i)}=$seg"
+object IceLiteWrite {
+  /** IceLite manifest entries for staged files: the writer's ranges as
+    * column stats, plus min=max ranges for the partition values a hive
+    * layout keeps out of the files (a null value records none:
+    * conservative keep, matching the library's null-group stats) — the
+    * same per-file stats the library's manifest pass records, so
+    * partition pruning, DPP, storage-partitioned joins and metadata
+    * COUNT(*) behave identically for SQL-written data. */
+  def entries(files: Seq[WrittenFile], schema: StructType): Seq[ManifestEntry] =
+    files.map { f =>
+      val partRanges = f.partition.map { case (c, v) =>
+        val s = RollingWriter.valueString(v, schema(c).dataType)
+        c -> ColRange(Some(s), Some(s))
       }
-      cur = new IceLiteDataWriter(conf, location,
-        s"$dataRel/${segs.mkString("/")}", dataSchema, partitionId, taskId)
+      ManifestEntry(f.path, Some(f.ranges ++ partRanges), Some(f.rows), Some(f.sizeBytes),
+        Some(f.splitOffsets.toList))
     }
-    proj.project(row)
-    cur.write(proj)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    roll()
-    IceLitePartitionedWriteMessage(done.toList)
-  }
-
-  override def abort(): Unit = {
-    if (cur != null) cur.abort()
-    val fs = new Path(location).getFileSystem(conf.value)
-    done.foreach(m => fs.delete(new Path(location, m.relPath), false))
-  }
-
-  override def close(): Unit = if (cur != null) cur.close()
-}
-
-final case class IceLiteStreamingWriterFactory(
-    conf: SerializableHadoopConf,
-    location: String,
-    schema: StructType)
-    extends streaming.StreamingDataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    new IceLiteDataWriter(conf, location,
-      s"data/snap-e$epochId-${f"$partitionId%05d"}", schema, partitionId, taskId)
-}
-
-final class IceLiteWriterFactory(
-    conf: SerializableHadoopConf,
-    location: String,
-    dataRel: String,
-    schema: StructType)
-    extends DataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new IceLiteDataWriter(conf, location, dataRel, schema, partitionId, taskId)
-}
-
-/** Row-at-a-time parquet writer (parquet-mr Group API) with inline stats
-  * collection. The min/max strings use the same representations the
-  * library path's Spark `cast(string)` stats produce (Long/Int toString,
-  * Java Double/Float toString, raw strings compared with String.compareTo
-  * — the exact comparator cmpFor prunes with), so files written here
-  * participate in file skipping identically. */
-final class IceLiteDataWriter(
-    conf: SerializableHadoopConf,
-    location: String,
-    dataRel: String,
-    schema: StructType,
-    partitionId: Int,
-    taskId: Long)
-    extends DataWriter[InternalRow] {
-
-  private val relPath = f"$dataRel/part-$partitionId%05d-$taskId.parquet"
-  private val path    = new Path(location, relPath)
-  private val msgType = IceLiteWriteSchema.messageTypeFor(schema)
-  private val factory = new SimpleGroupFactory(msgType)
-  private val writer  = ExampleParquetWriter
-    .builder(HadoopOutputFile.fromPath(path, conf.value))
-    .withType(msgType)
-    .withConf(conf.value)
-    // honor the standard row-group size knob (the builder ignores the
-    // hadoop conf, unlike ParquetOutputFormat) — row-group granularity is
-    // what ranged splits parallelize over
-    .withRowGroupSize(conf.value.getLong("parquet.block.size", 128L * 1024 * 1024))
-    .build()
-
-  private var rows = 0L
-  // per-rangeable-column running (min, max); strings via compareTo,
-  // integers as Long, floats as Double — matching cmpFor's semantics
-  private val statCols: Array[(Int, DataType)] = schema.fields.zipWithIndex.collect {
-    case (f, i) if IceLiteWriteSchema.rangeable(f.dataType) => (i, f.dataType)
-  }
-  private val mins = new Array[Any](statCols.length)
-  private val maxs = new Array[Any](statCols.length)
-
-  override def write(row: InternalRow): Unit = {
-    val g = factory.newGroup()
-    var i = 0
-    while (i < schema.fields.length) {
-      if (!row.isNullAt(i)) {
-        val name = schema.fields(i).name
-        schema.fields(i).dataType match {
-          case StringType  => g.append(name, Binary.fromString(row.getUTF8String(i).toString))
-          case IntegerType | DateType => g.append(name, row.getInt(i))
-          case LongType | TimestampType | TimestampNTZType => g.append(name, row.getLong(i))
-          case FloatType   => g.append(name, row.getFloat(i))
-          case DoubleType  => g.append(name, row.getDouble(i))
-          case BooleanType => g.append(name, row.getBoolean(i))
-          case other => throw new UnsupportedOperationException(
-            s"icelite V2 write: unsupported type $other for column $name")
-        }
-      }
-      i += 1
-    }
-    var s = 0
-    while (s < statCols.length) {
-      val (idx, dt) = statCols(s)
-      if (!row.isNullAt(idx)) {
-        val v: Any = dt match {
-          case StringType            => row.getUTF8String(idx).toString
-          case IntegerType           => row.getInt(idx).toLong
-          case LongType              => row.getLong(idx)
-          case FloatType             => row.getFloat(idx).toDouble
-          case DoubleType            => row.getDouble(idx)
-          case _                     => null
-        }
-        if (v != null) {
-          if (mins(s) == null || lt(v, mins(s))) mins(s) = v
-          if (maxs(s) == null || lt(maxs(s), v)) maxs(s) = v
-        }
-      }
-      s += 1
-    }
-    writer.write(g)
-    rows += 1L
-  }
-
-  private def lt(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: Long, y: Long)     => x < y
-    case (x: Double, y: Double) => x < y
-    case (x: String, y: String) => x.compareTo(y) < 0
-    case _                      => false
-  }
-
-  /** Value -> the stats string representation the pruner compares. Floats
-    * ride Double.toString like Spark's cast; Long covers int columns. */
-  private def statStr(dt: DataType, v: Any): String = (dt, v) match {
-    case (IntegerType, x: Long) => x.toInt.toString
-    case (FloatType, x: Double) => x.toFloat.toString
-    case (_, x)                 => x.toString
-  }
-
-  override def commit(): WriterCommitMessage = {
-    writer.close()
-    val stats = statCols.indices.flatMap { s =>
-      val (idx, dt) = statCols(s)
-      if (mins(s) == null) None
-      else {
-        val lo = statStr(dt, mins(s))
-        val hi = statStr(dt, maxs(s))
-        // string bounds land TRUNCATED (Iceberg truncate(16): prefix lower,
-        // incremented-prefix upper) — a long-text column must never put two
-        // document-sized strings in every manifest entry. A missing upper
-        // (no code point could bump) reads as unbounded — conservative.
-        // EXEMPT: a position-delete file's file_path bounds stay FULL
-        // (Iceberg keeps full metrics there — truncated path bounds are
-        // useless for delete-applies-to-file pruning, since every path in
-        // a table shares a long prefix).
-        val exempt = schema.fieldNames.sameElements(IceTable.PositionDeleteSchema.fieldNames)
-        val range = dt match {
-          case StringType if !exempt => ColRange(
-            Some(graft.icelite.IcebergFormat.truncateLowerBound(lo)),
-            graft.icelite.IcebergFormat.truncateUpperBound(hi))
-          case _ => ColRange(Some(lo), Some(hi))
-        }
-        Some(schema.fields(idx).name -> range)
-      }
-    }.toMap
-    // size + split_offsets from the just-written footer (executor-side,
-    // file still hot) — manifests carry them so an oversized file can be
-    // range-split at plan time with zero IO
-    val (size, offsets) = if (rows == 0) (0L, Nil) else {
-      import scala.jdk.CollectionConverters._
-      val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf.value))
-      try {
-        val blocks = fr.getFooter.getBlocks.asScala
-        (path.getFileSystem(conf.value).getFileStatus(path).getLen,
-          blocks.map(_.getStartingPos).toSeq)
-      } finally fr.close()
-    }
-    IceLiteWriteMessage(relPath, rows, stats, size, offsets)
-  }
-
-  override def abort(): Unit = {
-    writer.close()
-    val fs = path.getFileSystem(conf.value)
-    fs.delete(path, false)
-  }
-
-  override def close(): Unit = ()
-}
-
-object IceLiteWriteSchema {
-
-  def rangeable(dt: DataType): Boolean = dt match {
-    case IntegerType | LongType | DoubleType | FloatType | StringType => true
-    case _                                                            => false
-  }
-
-  /** Parquet MessageType for the flat primitive surface, physical layouts
-    * matching what Spark's own writer emits (so the V2 reader, Spark's
-    * vectorized reader and DuckDB all read these files identically). */
-  def messageTypeFor(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach { f =>
-      val t = f.dataType match {
-        case StringType =>
-          Types.optional(BINARY).as(LogicalTypeAnnotation.stringType())
-        case IntegerType => Types.optional(INT32)
-        case LongType    => Types.optional(INT64)
-        case FloatType   => Types.optional(FLOAT)
-        case DoubleType  => Types.optional(DOUBLE)
-        case BooleanType => Types.optional(BOOLEAN)
-        case DateType =>
-          Types.optional(INT32).as(LogicalTypeAnnotation.dateType())
-        case TimestampType =>
-          Types.optional(INT64).as(LogicalTypeAnnotation.timestampType(
-            true, LogicalTypeAnnotation.TimeUnit.MICROS))
-        case TimestampNTZType =>
-          Types.optional(INT64).as(LogicalTypeAnnotation.timestampType(
-            false, LogicalTypeAnnotation.TimeUnit.MICROS))
-        case other => throw new UnsupportedOperationException(
-          s"icelite V2 write: unsupported type $other for column ${f.name} " +
-            "(flat primitive surface only; decimals go through the catalog append)")
-      }
-      // carry the table's field id into the parquet schema when the
-      // StructField is stamped (TableMetadata.stampedSchema) — what keeps
-      // these files resolvable by id after a rename/drop evolution
-      val named = t.named(f.name)
-      b.addField(
-        if (f.metadata.contains("parquet.field.id"))
-          named.withId(f.metadata.getLong("parquet.field.id").toInt)
-        else named)
-    }
-    b.named("spark_schema")
-  }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.icelite.{IceTable, IcebergFormat}
+import graft.icelite.IcebergFormat
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -355,12 +355,12 @@ object IcebergMorScan {
           case (Some(x), Some(y)) => java.lang.Long.compare(x, y)
           case _                  => 0
         }
-      case _ => a.toString.compareTo(b)
+      case _ => graft.icelite.StringOrder.compare(a.toString, b)
     }
     // transformed-space compare (ints from temporal/bucket, source-typed
     // truncate); incomparable pairs read as overlap (keep)
     def cmpT(a: Any, b: Any): Option[Int] = (a, b) match {
-      case (x: String, y: String) => Some(x.compareTo(y))
+      case (x: String, y: String) => Some(graft.icelite.StringOrder.compare(x, y))
       case (x: Number, y: Number) => Some(java.lang.Long.compare(x.longValue, y.longValue))
       case _                      => None
     }
@@ -444,13 +444,22 @@ object IcebergMorScan {
     }
   }
 
-  /** Smallest string no `prefix`-prefixed string can reach: increment the
-    * last non-U+FFFF char, dropping the tail (None for all-U+FFFF — no
-    * finite upper bound exists). Inclusive use stays conservative. */
+  /** Smallest string no `prefix`-prefixed string can reach in
+    * [[graft.icelite.StringOrder]]: bump the last code point that can be
+    * bumped (skipping the surrogate block), dropping the tail (None when
+    * every code point is U+10FFFF — no finite upper bound exists).
+    * Inclusive use stays conservative. */
   private[graft] def prefixSuccessor(prefix: String): Option[String] = {
-    val trimmed = prefix.reverse.dropWhile(_ == '\uffff').reverse
-    if (trimmed.isEmpty) None
-    else Some(trimmed.init + (trimmed.last + 1).toChar)
+    var end = prefix.length
+    while (end > 0) {
+      val cp    = prefix.codePointBefore(end)
+      val start = end - Character.charCount(cp)
+      if (cp < Character.MAX_CODE_POINT && !(cp >= 0xD800 && cp <= 0xDFFF))
+        return Some(new java.lang.StringBuilder(prefix.substring(0, start))
+          .appendCodePoint(if (cp == 0xD7FF) 0xE000 else cp + 1).toString)
+      end = start
+    }
+    None
   }
 
   private def isLit(v: Any): Boolean = v match {
@@ -732,7 +741,7 @@ final class IcebergMorScan(
   override def createReaderFactory(): PartitionReaderFactory =
     new IceLiteReaderFactory(
       new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration),
-      required, partCols, tableSchema, limit, deleteFiles, eqDeleteFiles)
+      required, partCols, tableSchema, limit, deleteFiles, eqDeleteFiles, absolutePaths = true)
   // IO-free by contract: EXPLAIN must never force `partitions` (ranged
   // splits may open parquet footers); split counts print only if planning
   // already ran
@@ -833,44 +842,19 @@ final class IcebergMorDeltaWrite(
     private val deleteRel = s"data/deletes-$tag"
     private val dataRel   = s"data/delta-$tag"
 
+    // inserts stamp the table's REAL field ids and its tracked nested ids
+    // (stable across nested evolution); on an identity default spec they
+    // roll one file per value, each carrying its partition tuple
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
-      new IcebergMorDeltaWriterFactory(conf, location, deleteRel, dataRel, tableSchema,
-        p.fieldIds, // insert files stamp the table's REAL field ids
-        if (wantsClustering) partCols else Nil,
-        p.nestedIds) // tracked nested ids (stable across nested evolution)
+      FileDeltaWriterFactory(FileWriteSpec(conf, location, dataRel, tableSchema, p.fieldIds,
+        p.nestedIds, if (wantsClustering) partCols.map(_._2) else Nil), deleteRel)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val msgs = messages.toSeq.map(_.asInstanceOf[IcebergMorDeltaMessage])
-      val s    = SparkSession.active
-      val fs   = new Path(location).getFileSystem(s.sparkContext.hadoopConfiguration)
-      // content-1 position deletes, each with the spec-reserved
-      // file_path field's [min, max] from the writer's inline
-      // stats — what lets every reader range-prune this delete
-      val delInfos = msgs.flatMap(_.deleteFile).filter(_.rows > 0L).map { m =>
-        val abs = new Path(location, m.relPath)
-        val pathBounds = m.stats.get("file_path").toSeq.flatMap { r =>
-          for {
-            lo <- r.min; hi <- r.max
-            loB <- IcebergFormat.encodeBound(StringType, lo)
-            hiB <- IcebergFormat.encodeBound(StringType, hi)
-          } yield IcebergFormat.PosDeletePathFieldId -> (loB, hiB)
-        }.toMap
-        IcebergFormat.DataFileInfo(abs.toString, m.rows,
-          fs.getFileStatus(abs).getLen, bounds = pathBounds, content = 1)
-      }
-      // content-0 insert files: bounds arrive keyed by schema
-      // position+1 — remap to the table's REAL field ids (sparse
-      // after evolution) so pruning keys match the metadata
-      val dataInfos = msgs.flatMap(_.dataFiles).filter(_.rows > 0L).map { m =>
-        def remap[A](byPos: Map[Int, A]): Map[Int, A] = byPos.flatMap { case (id, v) =>
-          val idx = id - 1
-          if (idx >= 0 && idx < p.fieldIds.length) Some(p.fieldIds(idx) -> v)
-          else None
-        }
-        IcebergFormat.DataFileInfo(m.absPath, m.rows, m.sizeBytes,
-          bounds = remap(m.bounds), splitOffsets = m.splitOffsets,
-          nullCounts = remap(m.nullCounts), partitionValues = m.partitionValues)
-      }
+      val s = SparkSession.active
+      val (data, deletes) = WrittenFiles.of(messages)
+      val delInfos  = deletes.map(IcebergV2Write.deleteFileInfo(location, _))
+      val dataInfos = data.map(IcebergV2Write.dataFileInfo(location, _, tableSchema, p.fieldIds,
+        partCols))
       if (delInfos.isEmpty && dataInfos.isEmpty) return // nothing matched: no snapshot
       val w = IcebergFormat.resumeWriter(s, location)
       if (wantsClustering)
@@ -889,139 +873,4 @@ final class IcebergMorDeltaWrite(
       ()
     }
   }
-}
-
-final case class IcebergMorDeltaMessage(
-    deleteFile: Option[IceLiteWriteMessage],
-    dataFiles: Seq[IcebergWriteMessage])
-    extends WriterCommitMessage
-
-/** Top-level (serializable) factory — an inner anonymous class would drag
-  * the whole operation, table plan included, into the task closure. */
-final class IcebergMorDeltaWriterFactory(
-    conf: SerializableHadoopConf,
-    location: String,
-    deleteRel: String,
-    dataRel: String,
-    schema: StructType,
-    fieldIds: Seq[Int] = Nil,
-    partCols: Seq[(String, String)] = Nil, // (spec field name, source column)
-    nestedIds: Map[String, Int] = Map.empty)
-    extends DeltaWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new IcebergMorDeltaWriter(conf, location, deleteRel, dataRel, schema, partitionId, taskId,
-      fieldIds, partCols, nestedIds)
-}
-
-/** Executor-side delta writer: streams `(_file, _pos)` row ids into one
-  * position-delete parquet per task (spec content-1 shape: `file_path`
-  * string + `pos` long, the exact columns [[IcebergFormat.scanFiles]] and
-  * DuckDB anti-join on), and UPDATE/MERGE insert rows into v2-layout data
-  * parquets via the field-id-preserving [[IcebergNestedDataWriter]]
-  * (inline min/max stats → manifest bounds). On an identity-partitioned
-  * default spec (`partCols` non-empty; rows arrive CLUSTERED + SORTED on
-  * them per RequiresDistributionAndOrdering) the insert path ROLLS one
-  * file per partition value per task and stamps the REAL partition tuple
-  * on its commit message — the files then commit under the partitioned
-  * spec and every conforming engine prunes them. */
-final class IcebergMorDeltaWriter(
-    conf: SerializableHadoopConf,
-    location: String,
-    deleteRel: String,
-    dataRel: String,
-    schema: StructType,
-    partitionId: Int,
-    taskId: Long,
-    fieldIds: Seq[Int] = Nil,
-    partCols: Seq[(String, String)] = Nil, // (spec field name, source column)
-    nestedIds: Map[String, Int] = Map.empty)
-    extends DeltaWriter[InternalRow] {
-
-  private var delWriter: IceLiteDataWriter = _
-  private var insWriter: IcebergNestedDataWriter = _
-  private val delRow =
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
-
-  private val partIdx: IndexedSeq[Int] = partCols.map(f => schema.fieldIndex(f._2)).toIndexedSeq
-  private var curKey: IndexedSeq[Any] = null // boxed identity values (null = SQL NULL)
-  private var rollSeq = 0
-  private val rolled = scala.collection.mutable.ListBuffer.empty[IcebergWriteMessage]
-
-  /** Boxed identity partition value in the manifest's avro type. */
-  private def partValue(i: Int, row: InternalRow): Any = {
-    val idx = partIdx(i)
-    if (row.isNullAt(idx)) null
-    else schema.fields(idx).dataType match {
-      case StringType              => row.getUTF8String(idx).toString
-      case IntegerType | DateType  => Int.box(row.getInt(idx))
-      case LongType                => Long.box(row.getLong(idx))
-      case BooleanType             => Boolean.box(row.getBoolean(idx))
-      case other => throw new UnsupportedOperationException(
-        s"identity partition type $other for ${schema.fields(idx).name}")
-    }
-  }
-
-  private def rollInsert(): Unit = if (insWriter != null) {
-    val m = insWriter.commit().asInstanceOf[IcebergWriteMessage]
-    // tuples key by the SPEC FIELD name — buildEntry/summarize look them
-    // up there; a field named differently from its source column would
-    // otherwise publish a null tuple and external engines would prune
-    // away the restated rows
-    rolled += m.copy(partitionValues =
-      partCols.map(_._1).zip(curKey).filter(_._2 != null).toMap)
-    insWriter = null
-  }
-
-  override def delete(metadata: InternalRow, id: InternalRow): Unit = {
-    if (delWriter == null)
-      delWriter = new IceLiteDataWriter(conf, location, deleteRel,
-        IceTable.PositionDeleteSchema, partitionId, taskId)
-    delRow.update(0, id.getUTF8String(0).clone())
-    delRow.update(1, id.getLong(1))
-    delWriter.write(delRow)
-  }
-
-  override def insert(row: InternalRow): Unit = {
-    if (partCols.nonEmpty) {
-      val key = partIdx.indices.map(i => partValue(i, row))
-      if (insWriter == null || key != curKey) {
-        rollInsert()
-        curKey = key
-        insWriter = new IcebergNestedDataWriter(conf, location, dataRel, schema,
-          partitionId, taskId, fieldIds, nameSuffix = f"-p$rollSeq%04d",
-          nestedIds = nestedIds)
-        rollSeq += 1
-      }
-    } else if (insWriter == null)
-      insWriter = new IcebergNestedDataWriter(conf, location, dataRel, schema,
-        partitionId, taskId, fieldIds, nestedIds = nestedIds)
-    insWriter.write(row)
-  }
-
-  /** Never called: representUpdateAsDeleteAndInsert splits updates. */
-  override def update(metadata: InternalRow, id: InternalRow, row: InternalRow): Unit =
-    throw new UnsupportedOperationException(
-      "iceberg-format delta updates are represented as delete+insert")
-  override def reinsert(metadata: InternalRow, row: InternalRow): Unit = insert(row)
-
-  override def commit(): WriterCommitMessage = {
-    val inserts =
-      if (partCols.nonEmpty) { rollInsert(); rolled.toSeq }
-      else Option(insWriter).map(_.commit().asInstanceOf[IcebergWriteMessage]).toSeq
-    IcebergMorDeltaMessage(
-      Option(delWriter).map(_.commit().asInstanceOf[IceLiteWriteMessage]), inserts)
-  }
-
-  override def abort(): Unit = {
-    if (delWriter != null) delWriter.abort()
-    if (insWriter != null) insWriter.abort()
-    // already-rolled per-partition files are committed to disk but not yet
-    // to the table — a retried task would otherwise leave them as orphans
-    // next to live data (the job-level abort never runs when the retry
-    // succeeds); same pattern as IceLitePartitionedWriter.abort
-    val fs = new Path(location).getFileSystem(conf.value)
-    rolled.foreach(m => fs.delete(new Path(m.absPath), false))
-    rolled.clear()
-  }
-  override def close(): Unit = ()
 }

@@ -682,4 +682,30 @@ class DataSourceV2Spec extends SparkSpec {
     assert(spark.conf.get("spark.sql.parquet.fieldId.read.enabled") == "false",
       "read-by-id scan leaked fieldId.read.enabled into the caller's session")
   }
+
+  test("string bounds prune in code-point order: a supplementary char sorts above U+FFFD") {
+    // UTF-16 order puts U+1F600 below U+FFFD, UTF-8 byte order above it;
+    // bounds are recorded in byte order, so a UTF-16 pruner drops live files
+    import spark.implicits._
+    val wh  = scratch("v2strorder")
+    val cat = "so_spec"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.IceLiteCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    try {
+      val df = Seq((1L, "\uFFFD"), (2L, "\uD83D\uDE00"), (3L, "a")).toDF("k", "s").coalesce(1)
+      val fs = new FsCatalog(spark, wh)
+      val flat = fs.createOrReplaceTable("ns", "flat", df)
+      flat.exportIceberg(s"$wh/ns/exported")
+      Seq("flat", "exported").foreach { t =>
+        def n(where: String) =
+          spark.sql(s"SELECT k FROM $cat.ns.$t WHERE $where").collect().map(_.getLong(0)).sorted.toSeq
+        assert(n("s = '\uFFFD'") == Seq(1L), s"$t: equality pruned the live file")
+        assert(n("s >= '\uFFFD'") == Seq(1L, 2L), s"$t: range pruned a live file")
+        assert(n("s > 'b'") == Seq(1L, 2L), t)
+      }
+    } finally {
+      spark.conf.unset(s"spark.sql.catalog.$cat")
+      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
+    }
+  }
 }

@@ -135,7 +135,7 @@ class WriterPinSpec extends SparkSpec {
     view("pin_src", rows(1L to 6L))
     spark.sql(s"INSERT INTO $cat.ns.ins SELECT * FROM pin_src")
     pinned(iceRows(ice("ins")), Seq(
-      "rows=6 size=1464 offs=4 k:[1,6];n:[10,60];p:[p1,p3];s:[a,\uFFFD];x:[-2.25,6.5]"))
+      "rows=6 size=1464 offs=4 k:[1,6];n:[10,60];p:[p1,p3];s:[a,\uD83D\uDE00];x:[-2.25,6.5]"))
   }
 
   test("icelite INSERT into a hive-partitioned table: one file per value") {
@@ -161,7 +161,7 @@ class WriterPinSpec extends SparkSpec {
       .start()
       .awaitTermination()
     pinned(iceRows(ice("stream")), Seq(
-      "rows=6 size=1464 offs=4 k:[1,6];n:[10,60];p:[p1,p3];s:[a,\uFFFD];x:[-2.25,6.5]"))
+      "rows=6 size=1464 offs=4 k:[1,6];n:[10,60];p:[p1,p3];s:[a,\uD83D\uDE00];x:[-2.25,6.5]"))
   }
 
   test("icelite copy-on-write MERGE: rewritten files") {
@@ -172,7 +172,7 @@ class WriterPinSpec extends SparkSpec {
     spark.sql(s"""MERGE INTO $cat.ns.cow t USING pin_upd u ON t.k = u.k
                   WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""")
     pinned(iceRows(ice("cow")), Seq(
-      "rows=7 size=1503 offs=4 k:[1,7];n:[10,70];p:[p1,p3];s:[a,\uFFFD];x:[-2.25,7.25]"))
+      "rows=7 size=1503 offs=4 k:[1,7];n:[10,70];p:[p1,p3];s:[a,\uD83D\uDE00!];x:[-2.25,7.25]"))
   }
 
   private def withMor[A](body: => A): A = {
@@ -186,7 +186,7 @@ class WriterPinSpec extends SparkSpec {
     spark.sql(s"INSERT INTO $cat.ns.mordel SELECT * FROM pin_src")
     withMor(spark.sql(s"DELETE FROM $cat.ns.mordel WHERE k <= 2"))
     pinned(iceRows(ice("mordel")), Seq(
-      "rows=6 size=1464 offs=4 k:[1,6];n:[10,60];p:[p1,p3];s:[a,\uFFFD];x:[-2.25,6.5]",
+      "rows=6 size=1464 offs=4 k:[1,6];n:[10,60];p:[p1,p3];s:[a,\uD83D\uDE00];x:[-2.25,6.5]",
       "delete rows=2 size=disk file_path:[data#0,data#0];pos:[0,1]"))
   }
 
@@ -199,7 +199,7 @@ class WriterPinSpec extends SparkSpec {
                           WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"""))
     pinned(iceRows(ice("mormerge")), Seq(
       "rows=2 size=1325 offs=4 k:[3,7];n:[30,70];p:[p2,p3];s:[new!,\uD83D\uDE00!];x:[3.0,7.25]",
-      "rows=6 size=1464 offs=4 k:[1,6];n:[10,60];p:[p1,p3];s:[a,\uFFFD];x:[-2.25,6.5]",
+      "rows=6 size=1464 offs=4 k:[1,6];n:[10,60];p:[p1,p3];s:[a,\uD83D\uDE00];x:[-2.25,6.5]",
       "delete rows=1 size=disk file_path:[data#1,data#1];pos:[2,2]"))
   }
 
@@ -208,7 +208,7 @@ class WriterPinSpec extends SparkSpec {
     rows(1L to 6L).write.format("icelite").option("iceberg", "true")
       .option("location", loc).mode("overwrite").save()
     pinned(v2Rows(loc), Seq(
-      "rows=6 size=1464 offs=4 bounds=k:[1,6];s:[a,\uFFFD];x:[-2.25,6.5];n:[10,60];p:[p1,p3] nulls=k=0,s=1,x=1,n=1,b=1,p=1,dt=1 part="))
+      "rows=6 size=1464 offs=4 bounds=k:[1,6];s:[a,\uD83D\uDE00];x:[-2.25,6.5];n:[10,60];p:[p1,p3] nulls=k=0,s=1,x=1,n=1,b=1,p=1,dt=1 part="))
   }
 
   test("iceberg v2 MERGE on an identity-partitioned table") {
